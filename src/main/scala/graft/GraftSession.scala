@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * 100 TB, where AQE coalesces the post-shuffle partitions the static
   * number gets wrong.
   */
-object GraftSession {
+object GraftSession extends org.apache.spark.internal.Logging {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
   /** Master override for cross-process validation legs: e.g.
@@ -80,14 +80,28 @@ object GraftSession {
   /** Ad-hoc conf overrides for A/B experiments, applied LAST so they win:
     * SPARK_GRAFT_CONF="spark.x=1;spark.y=2". Never set by the bench
     * driver; exists so a config hypothesis can be measured without a
-    * rebuild (the r13 A/B discipline). */
-  def extraConf: Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';')).flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
-        case _ => None
+    * rebuild (the r13 A/B discipline). A run under overrides says so:
+    * each applied pair is logged, and each malformed segment (no `=`,
+    * or an empty key) is dropped with a warning. */
+  def extraConf: Seq[(String, String)] = {
+    val (pairs, dropped) = parseConf(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+    pairs.foreach { case (k, v) => logInfo(s"SPARK_GRAFT_CONF override applied: $k=$v") }
+    dropped.foreach(seg => logWarning(s"SPARK_GRAFT_CONF segment dropped, not key=value: '$seg'"))
+    pairs
+  }
+
+  /** `k=v;k2=v2` → (the trimmed pairs, the non-blank segments that are
+    * not `key=value`). Blank segments, as from a trailing `;`, are
+    * skipped silently. */
+  def parseConf(raw: String): (Seq[(String, String)], Seq[String]) = {
+    val parsed = raw.split(';').toSeq.filter(_.trim.nonEmpty).map { seg =>
+      seg.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => Right(k.trim -> v.trim)
+        case _ => Left(seg)
       }
     }
+    (parsed.collect { case Right(kv) => kv }, parsed.collect { case Left(seg) => seg })
+  }
 
   def builder(appName: String): SparkSession.Builder =
     SparkSession

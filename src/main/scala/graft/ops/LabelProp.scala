@@ -99,24 +99,32 @@ object LabelProp {
     * fits an executor. Edge-SET semantics: `edges` is deduplicated in
     * place ([[prepare]]) — each neighbor contributes its label ONCE per
     * round, as LPA requires; a weighted-multiset (multigraph) LPA would
-    * need a different operator. */
-  def propagateBroadcast(edges: DataFrame, rounds: Int): DataFrame =
+    * need a different operator. Precondition: `rounds >= 1`, since round
+    * 1 is the label initialization; a smaller value throws
+    * `IllegalArgumentException` before any edge cache is registered. */
+  def propagateBroadcast(edges: DataFrame, rounds: Int): DataFrame = {
+    requireRounds(rounds)
     runRounds(prepare(edges), rounds, broadcastLabels = true)
+  }
 
   /** Shuffle mode: the Σdeg-sized edge side is partitioned on src once
     * and never exchanged again; each round moves only the label table
-    * and census-sized aggregate partials. Edge-SET semantics, as
-    * [[propagateBroadcast]]. */
-  def propagateShuffle(edges: DataFrame, rounds: Int): DataFrame =
+    * and census-sized aggregate partials. Edge-SET semantics and
+    * `rounds >= 1`, as [[propagateBroadcast]]. */
+  def propagateShuffle(edges: DataFrame, rounds: Int): DataFrame = {
+    requireRounds(rounds)
     runRounds(prepare(edges), rounds, broadcastLabels = false)
+  }
 
   /** Size-gated propagation: measure |nodes| FROM the partitioned cache
     * both modes share (a co-partitioned distinct-count — no second
     * materialization, no extra exchange), then run the mode that
     * survives that size. Both modes compute the identical deterministic
-    * labeling. Edge-SET semantics, as [[propagateBroadcast]]. */
+    * labeling. Edge-SET semantics and `rounds >= 1`, as
+    * [[propagateBroadcast]]. */
   def propagate(edges: DataFrame, rounds: Int,
                 broadcastMaxLabels: Long = DefaultBroadcastMaxLabels): DataFrame = {
+    requireRounds(rounds)
     val e = prepare(edges)
     // the gate count doubles as the cache-materializing action — a
     // co-partitioned distinct-count, no second materialization (r12);
@@ -125,6 +133,14 @@ object LabelProp {
     val nLabels = e.select(col("src").as("node")).distinct().count()
     runRounds(e, rounds, useBroadcast(nLabels, broadcastMaxLabels))
   }
+
+  /** The precondition of every entry point: at least one round, since
+    * round 1 is the label initialization (no rounds would leave no label
+    * table to return). An `IllegalArgumentException` otherwise, thrown
+    * before the edge cache is registered, so a rejected call leaks
+    * nothing. */
+  private def requireRounds(rounds: Int): Unit =
+    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
 
   /** The single materialization both modes (and the gate) read:
     * src-partitioned cached DISTINCT edges. Lazily populated — the
@@ -156,7 +172,6 @@ object LabelProp {
     * returning and composing LabelProp inside a longer job never pays
     * lingering edge memory. */
   private def runRounds(e: DataFrame, rounds: Int, broadcastLabels: Boolean): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     var lbl: DataFrame = null
     for (r <- 1 to rounds) {
       // Round 1 fused (r13): under identity initial labels the round's

@@ -223,7 +223,14 @@ object CoreQueries {
     * `events.event_type` has a handful of values, so every key's rows land
     * in one shuffle partition in the plain join. Salting scatters each hot
     * key over 8 sub-keys and replicates the (tiny) dimension side; the
-    * oracle runs the plain join, proving salting is semantics-preserving. */
+    * oracle runs the plain join, proving salting is semantics-preserving.
+    *
+    * The weighted sum is exact: weight x 2 and the value in cents are
+    * integers, so the sum is an integer count of half-cents, rounded half
+    * away from zero to cents after the sum. Summed as floats, one group's
+    * total lands on an exact half-cent tie on most fixture seeds, and the
+    * summation order (which differs between engines, and between plans)
+    * decides which cent the tie rounds to. */
   val saltedSkew = Q(
     "j_salted_skew",
     "Salted skew join: 8-way salt scatter of hot event_type keys + replicated dim side, then per-key roll-up; result identical to the plain join.",
@@ -239,10 +246,15 @@ object CoreQueries {
         .groupBy(col("event_type"))
         .agg(
           count(lit(1)).as("n"),
-          round(sum(col("weight") * col("value")), 2).as("weighted_value"))
+          sum(round(col("weight") * 2).cast("long") * round(col("value") * 100).cast("long"))
+            .as("half_cents"))
+        .select(col("event_type"), col("n"),
+          (round(col("half_cents").cast("double") / 2) / 100.0).as("weighted_value"))
     },
     Some("""SELECT e.event_type, count(*) AS n,
-            round(sum(CAST(d.weight AS DOUBLE) * e.value), 2) AS weighted_value
+            round(CAST(CAST(sum(CAST(round(d.weight * 2) AS BIGINT) *
+                                CAST(round(e.value * 100) AS BIGINT)) AS BIGINT) AS DOUBLE) / 2)
+              / CAST(100.0 AS DOUBLE) AS weighted_value
             FROM events e
             JOIN (VALUES ('click', 1.0), ('view', 1.5), ('signup', 2.0),
                          ('error', 0.5), ('purchase', 3.0)) AS d(event_type, weight)

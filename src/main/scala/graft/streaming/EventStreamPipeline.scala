@@ -197,9 +197,11 @@ object EventStreamPipeline {
     * deterministic integer mapping into the continental-US box stands in
     * (and every 19th event lands outside it, keeping the stream's
     * validation/reject path live). Pure column logic — identical on
-    * static and streaming frames, which is how the spec verifies it. */
-  def eventRequests(events: DataFrame): DataFrame =
-    route(events).select(
+    * static and streaming frames, which is how the spec verifies it.
+    * `carry` names event columns passed through unchanged after the
+    * request columns. */
+  def eventRequests(events: DataFrame, carry: Seq[String] = Nil): DataFrame =
+    route(events).select(Seq(
       concat(lit("req_"), col("event_id")).as("request_id"),
       col("event_id").as("trigger_event_id"),
       col("priority"), col("sources"), col("timeout_s"),
@@ -208,7 +210,7 @@ object EventStreamPipeline {
         + when(pmod(col("event_id"), lit(19)) === 0, 60.0).otherwise(0.0)).as("lon"),
       when(col("priority") === "emergency", 5000.0)
         .when(col("event_type") === "signup", 2000.0).otherwise(500.0).as("buffer_m"),
-      concat(lit("evt-"), col("event_id")).as("event_id"))
+      concat(lit("evt-"), col("event_id")).as("event_id")) ++ carry.map(col): _*)
 
   /** §3.3 end-to-end — the background dispatch the reference leaves as a
     * TODO (orchestrator.py:978-981 "Store result in database linked to
@@ -223,10 +225,17 @@ object EventStreamPipeline {
     * metadata rides the enrichment fan-out (enrich's `carry`) instead
     * of being joined back on request_id afterwards, and the pivot
     * groups on (request_id, metadata) in the same aggregate. Nothing
-    * per-event on the driver. */
-  def collectForEvents(events: DataFrame): DataFrame = {
+    * per-event on the driver.
+    *
+    * `carry` names event columns that ride the same way and come back
+    * after the response columns, so a caller that needs them (the
+    * serving path's `ts`) does not join the result back to the events.
+    * They join the pivot's grouping key: rows that share an event id
+    * but differ in a carried column get one response each. They must
+    * not collide with the request or response column names. */
+  def collectForEvents(events: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     import graft.ops.CollectPipeline
-    val reqs = eventRequests(events)
+    val reqs = eventRequests(events, carry)
     // routed-source membership precomputed as ONE boolean per request
     // before the 4x fan-out: a per-tall-row split+array_contains over
     // the sources string costs ~6 micros/row at 100k events (the
@@ -236,14 +245,14 @@ object EventStreamPipeline {
       .withColumn("all_sources",
         col("sources") === "landfire,modis,weather,topography")
     val tall = CollectPipeline.enrich(valid,
-        carry = Seq("trigger_event_id", "priority", "all_sources", "timeout_s"))
+        carry = Seq("trigger_event_id", "priority", "all_sources", "timeout_s") ++ carry)
       .filter(col("all_sources") || col("source") === "weather")
     // integer-coded risk pivot (see CollectPipeline.riskCode): a string
     // agg buffer would force SortAggregate over the 4x tall fan-out;
     // max == first since each (request, source) appears at most once
     tall
       .withColumn("risk_c", CollectPipeline.riskCode(col("risk")))
-      .groupBy(col("request_id"), col("trigger_event_id"), col("priority"), col("timeout_s"))
+      .groupBy((Seq("request_id", "trigger_event_id", "priority", "timeout_s") ++ carry).map(col): _*)
       .agg(
         max(when(col("source") === "landfire", col("risk_c"))).as("landfire_c"),
         max(when(col("source") === "modis", col("risk_c"))).as("modis_c"),
@@ -251,13 +260,13 @@ object EventStreamPipeline {
         max(when(col("source") === "topography", col("risk_c"))).as("topography_c"),
         count(lit(1)).as("sources_successful"),
         count(when(col("risk").isin("HIGH", "EXTREME"), 1)).as("n_high_risk"))
-      .select(col("request_id"), col("trigger_event_id").as("event_id"),
+      .select(Seq(col("request_id"), col("trigger_event_id").as("event_id"),
         col("priority"), col("timeout_s"),
         CollectPipeline.riskDecode(col("landfire_c")).as("landfire"),
         CollectPipeline.riskDecode(col("modis_c")).as("modis"),
         CollectPipeline.riskDecode(col("weather_c")).as("weather"),
         CollectPipeline.riskDecode(col("topography_c")).as("topography"),
-        col("sources_successful"), col("n_high_risk"))
+        col("sources_successful"), col("n_high_risk")) ++ carry.map(col): _*)
   }
 
   /** §3.3 streaming entry — T1 ingest → T2 route → the §3.1 collect

@@ -64,11 +64,7 @@ object StatefulEventTracker {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    // RocksDB state store: keyed state spills to local disk instead of
-    // living on-heap — the setting that lets billions of keys fit a
-    // fixed executor memory budget (HDFSBackedStateStore is heap-bound)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    RocksDBState.use(spark)
     val stream = spark.readStream
       .schema(EventStreamPipeline.eventSchema)
       .option("maxFilesPerTrigger", "4")

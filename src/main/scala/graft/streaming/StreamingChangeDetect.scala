@@ -70,8 +70,7 @@ object StreamingChangeDetect {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    RocksDBState.use(spark)
     val stream = spark.readStream
       .schema(EventStreamPipeline.eventSchema)
       .option("maxFilesPerTrigger", "1")

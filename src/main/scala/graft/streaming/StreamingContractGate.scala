@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import org.apache.spark.sql.types._
@@ -32,17 +32,21 @@ object StreamingContractGate {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
+  /** The row-local contract checks, by name, in `checkPairs` order. */
+  private def checks: Seq[(String, Column)] = Seq(
+    "accepted_event_type" -> col("event_type").isin("click", "view", "purchase", "signup", "error"),
+    "value_non_negative" -> (col("value") >= 0),
+    "not_null_props" -> col("props").isNotNull)
+
+  /** The check names; `checkPairs(i)` holds check `checkNames(i)`. */
+  val checkNames: Seq[String] = checks.map(_._1)
+
   /** The row-local contract checks as (check, ok) pairs — the single
     * source of truth shared by this gate's counters and by composed
     * pipelines (ServingPipeline) that quarantine on the same contract. */
-  def checkPairs: org.apache.spark.sql.Column = array(
-    struct(lit("accepted_event_type").as("check"),
-      col("event_type").isin("click", "view", "purchase", "signup", "error")
-        .cast("long").as("ok")),
-    struct(lit("value_non_negative").as("check"),
-      (col("value") >= 0).cast("long").as("ok")),
-    struct(lit("not_null_props").as("check"),
-      col("props").isNotNull.cast("long").as("ok")))
+  def checkPairs: Column = array(checks.map { case (name, ok) =>
+    struct(lit(name).as("check"), ok.cast("long").as("ok"))
+  }: _*)
 
   class Processor extends StatefulProcessor[String, CheckRow, GateRow] {
     @transient private var st: ValueState[Counts] = _
@@ -67,8 +71,7 @@ object StreamingContractGate {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    RocksDBState.use(spark)
     val stream = spark.readStream
       .schema(eventSchema)
       .option("maxFilesPerTrigger", "1")

@@ -61,8 +61,7 @@ object StreamingCountMin {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    RocksDBState.use(spark)
     val cells = (0 until 4).map { j =>
       struct(expr(
         s"${j}L * $W + (((user_id % 1000003L) * ${A(j)}L + ${B(j)}L) % 1000003L) % $W")

@@ -89,8 +89,7 @@ object StreamingFunnel {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String, idleMs: Long = 3600000L): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    RocksDBState.use(spark)
     val stream = spark.readStream
       .schema(EventStreamPipeline.eventSchema)
       .option("maxFilesPerTrigger", "1")

@@ -100,8 +100,7 @@ object StreamingNearDup {
   def runWithSink(spark: SparkSession, srcDir: String, checkpointDir: String,
                   sink: (Dataset[CandPair], Long) => Unit): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    RocksDBState.use(spark)
     val docs = spark.readStream
       .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
       .option("maxFilesPerTrigger", "2")

@@ -69,8 +69,7 @@ object StreamingResultCache {
           checkpointDir: String, ttlSeconds: Long,
           compute: (Long, Long) => Long): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    RocksDBState.use(spark)
     val stream = spark.readStream
       .schema("key LONG, ts TIMESTAMP")
       .option("maxFilesPerTrigger", "1")

@@ -87,8 +87,7 @@ object StreamingRetention {
   def runWithSink(spark: SparkSession, srcDir: String, checkpointDir: String,
                   sink: (Dataset[RetRow], Long) => Unit): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    RocksDBState.use(spark)
     val stream = spark.readStream
       .schema(EventStreamPipeline.eventSchema)
       .option("maxFilesPerTrigger", "1")

@@ -79,8 +79,7 @@ object StreamingTopK {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String, userCap: Long = 25): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    RocksDBState.use(spark)
     val stream = spark.readStream
       .schema(EventStreamPipeline.eventSchema)
       .option("maxFilesPerTrigger", "4")

@@ -44,4 +44,11 @@ class GraftSessionSpec extends AnyFunSuite {
         GraftSession.derivedBroadcastMax(Runtime.getRuntime.maxMemory, GraftSession.master).toString)
     }
   }
+
+  test("SPARK_GRAFT_CONF keeps key=value pairs and reports each malformed segment") {
+    val (pairs, dropped) = GraftSession.parseConf(" spark.a = 1;novalue;=x;spark.b=c=d;; ")
+    assert(pairs == Seq("spark.a" -> "1", "spark.b" -> "c=d"))
+    assert(dropped == Seq("novalue", "=x"))
+    assert(GraftSession.parseConf("") == ((Nil, Nil)))
+  }
 }

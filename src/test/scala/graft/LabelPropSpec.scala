@@ -121,4 +121,16 @@ class LabelPropSpec extends SparkSpecBase {
   private def plannerShuffles(p: String): Seq[String] =
     "Exchange hashpartitioning\\((\\w+)#[^\\n]*ENSURE_REQUIREMENTS".r
       .findAllMatchIn(p).map(_.group(1)).toSeq.sorted
+
+  test("rounds = 0 is rejected by every entry point before an edge cache is registered") {
+    val e = fixtureEdges
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val prepared = e.repartition(col("src")).distinct()
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    for (run <- Seq[DataFrame => DataFrame](LabelProp.propagate(_, 0),
+        LabelProp.propagateBroadcast(_, 0), LabelProp.propagateShuffle(_, 0))) {
+      intercept[IllegalArgumentException](run(e))
+      assert(cache.lookupCachedData(prepared).isEmpty)
+    }
+  }
 }

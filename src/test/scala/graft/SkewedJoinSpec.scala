@@ -32,4 +32,30 @@ class SkewedJoinSpec extends SparkSpecBase {
       .select("__salt").distinct().count()
     assert(nBuckets == 8) // all buckets used -> 8-way parallelism on the hot key
   }
+
+  test("j_salted_skew rounds an exact half-cent tie the same way in every plan") {
+    // two 'error' events (weight 0.5): 2.82 + 2.995 = 5.815 exactly, a
+    // half-cent tie, while the float sum is 5.8149999999999995
+    val dir = java.nio.file.Files.createTempDirectory("salted_tie").toString
+    Seq((1L, "error", 5.64), (2L, "error", 5.99), (3L, "click", 10.01), (4L, "view", 0.33))
+      .toDF("event_id", "event_type", "value")
+      .select(col("event_id"), expr("timestamp_micros(1704067200000000)").as("ts"),
+        lit(1L).as("user_id"), col("event_type"), col("value"), lit("{}").as("props"))
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    val floatForm = spark.read.parquet(s"$dir/events.parquet")
+      .filter(col("event_type") === "error")
+      .agg(round(sum(lit(0.5) * col("value")), 2)).as[Double].head()
+    assert(floatForm == 5.81) // the float form rounds the tie down
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      for (parts <- Seq("1", "8")) {
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        val got = graft.queries.QueryRegistry.queries("j_salted_skew")(spark, dir)
+          .as[(String, Long, Double)].collect().toSet
+        // half away from zero, as DuckDB's and Spark's round do
+        assert(got == Set(("error", 2L, 5.82), ("click", 1L, 10.01), ("view", 1L, 0.5)),
+          s"shuffle partitions $parts")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
 }
